@@ -473,9 +473,9 @@ class IvfPqIndex:
         holds trained quantizers but no commit exists — an in-memory
         shortcut would append to exactly the half-built index this
         refusal guards against, and disk is the source of truth for
-        what the on-disk codes were encoded with."""
-        self.coarse, self.codebooks = None, None
-        self._meta()  # reads + param-checks the sidecar (raises if none)
+        what the on-disk codes were encoded with. A refused append leaves
+        the object's quantizers as they were."""
+        self.coarse, self.codebooks = self._read_sidecar()  # raises if none
         self._encode_write(df, vec_col, id_col, mode="append")
         return self
 
@@ -532,8 +532,14 @@ class IvfPqIndex:
            .parquet(self.path))
 
     def _meta(self) -> tuple[list[list[float]], list[list[list[float]]]]:
-        if self.coarse is not None and self.codebooks is not None:
-            return self.coarse, self.codebooks
+        if self.coarse is None or self.codebooks is None:
+            self.coarse, self.codebooks = self._read_sidecar()
+        return self.coarse, self.codebooks
+
+    def _read_sidecar(self
+                      ) -> tuple[list[list[float]], list[list[list[float]]]]:
+        """(coarse, codebooks) from the committed sidecar, after checking
+        its parameters against this object's; mutates nothing."""
         import json
         import os
 
@@ -551,8 +557,7 @@ class IvfPqIndex:
                 f"IVF-PQ index params {on_disk} != requested {mine}: codes "
                 "are incomparable. Rebuild or reopen with the on-disk "
                 "parameters.")
-        self.coarse, self.codebooks = meta["coarse"], meta["codebooks"]
-        return self.coarse, self.codebooks
+        return meta["coarse"], meta["codebooks"]
 
     def ann_topk(self, query_vec: list[float], k: int = 10,
                  n_probe: int = 1, exclude_id=None,

@@ -164,7 +164,9 @@ class SearchEngine:
         (and head-term sharding) after incremental deltas marked the blocks
         manifest's avgdl stale — one postings scan, no docs/postings
         rewrite, crash-safe partition-overwrite commit. The Iceberg analog
-        is a metadata-refreshing table OPTIMIZE."""
+        is a metadata-refreshing table OPTIMIZE. Exact/WAND readers see the
+        old or the new blocks; a driver query running during the commit can
+        see both generations (see IndexBuilder.refresh_blocks)."""
         from ..sources.tableio import resolve_layout
 
         cfg = resolve_layout(self.io, self.cfg)

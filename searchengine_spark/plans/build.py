@@ -394,9 +394,17 @@ class IndexBuilder:
         rebuild; this costs O(one postings scan), touches neither docs nor
         postings, re-shards terms whose df crossed the salting threshold
         since the last full build, and commits via the crash-safe
-        partition-overwrite protocol (old blocks snapshot readable until
-        the manifest swap — safe against a live serving reader, unlike
-        write_stage's destructive overwrite).
+        partition-overwrite protocol: old blocks snapshot readable until
+        the manifest swap, unlike write_stage's destructive overwrite.
+
+        Reader guarantee: Spark reads are manifest-pinned, so they see
+        exactly the old or the new blocks. The pyarrow driver path
+        (plans/serve.py) reads directories: a driver query that overlaps
+        the window between the generation move and the post-swap vacuum
+        sees both block generations (duplicate blocks, double-counted
+        scores). Do not run driver queries on this work dir while the
+        refresh commits; after a crash mid-commit, warm() removes the
+        orphan generation before serving.
 
         Refuses while a staged delta is pending: postings could be at
         either snapshot of an in-flight commit, and encoding them would

@@ -17,6 +17,12 @@ row counts read from parquet footers (no extra Spark job). A stage is
 resumable iff its manifest says status=complete and the data dir exists;
 the reference's analog is the site status row lifecycle
 (services/IndexingServiceImpl.java:80-108,165-171).
+
+Storage format: every index table file (and every raw delta staging file)
+is zstd-compressed Parquet, written through `write_parquet` — the codec
+Iceberg writes by default. Parquet records the codec per column chunk, so
+an index whose older files are snappy reads and upserts unchanged; there is
+no codec layout version. Per-table sizes: BENCH/BASELINE.md, "Index codec".
 """
 
 from __future__ import annotations
@@ -30,6 +36,21 @@ from typing import Any
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+
+
+# Codec of every index file: zstd makes the index ~30% smaller than Spark's
+# default snappy (docs −40%); BENCH/BASELINE.md, "Index codec".
+PARQUET_CODEC = "zstd"
+
+
+def write_parquet(df: DataFrame, path: str,
+                  partition_by: list[str] | None = None) -> None:
+    """The engine's one Parquet writer: overwrite `path` with df as
+    PARQUET_CODEC-compressed files, hive-partitioned by partition_by."""
+    writer = df.write.mode("overwrite").option("compression", PARQUET_CODEC)
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(path)
 
 
 @dataclass
@@ -140,10 +161,7 @@ class TableIO:
         target = self.path(table)
         t0 = time.monotonic()
         df = self._sorted_for_write(df, partition_by, sort_by)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(target)
+        write_parquet(df, target, partition_by)
         wall_ms = int((time.monotonic() - t0) * 1000)
 
         paths = []
@@ -358,7 +376,7 @@ class TableIO:
         tmp = os.path.join(self.work_dir, f"_tmp_{table}")
         shutil.rmtree(tmp, ignore_errors=True)
         t0 = time.monotonic()
-        df.write.mode("overwrite").parquet(tmp)
+        write_parquet(df, tmp)
         self._acquire_commit_lock(blocking=True)
         try:
             self._vacuum_locked(table)
@@ -428,7 +446,7 @@ class TableIO:
         # the Spark write (step 2, side dir) runs outside the lock — it
         # touches no live files; the lock covers vacuum + move + swap
         df = self._sorted_for_write(df, [partition_col], sort_by)
-        df.write.mode("overwrite").partitionBy(partition_col).parquet(tmp)
+        write_parquet(df, tmp, [partition_col])
         self._acquire_commit_lock(blocking=True)
         try:
             return self._commit_partitions(

@@ -59,7 +59,7 @@ from ..config import EngineConfig
 from ..functions.udfs import extract_docs, tokens_from_docs_sql, url_bucket_col
 from ..operators.doc_ids import assign_doc_ids
 from ..plans.build import IndexBuilder, term_bucket_col
-from ..sources.tableio import TableIO
+from ..sources.tableio import TableIO, write_parquet
 
 DOC_COLS = ["doc_id", "url", "site", "title", "text"]
 DELTA_DIR = "_delta"
@@ -81,7 +81,7 @@ def upsert_docs(spark, io: TableIO, cfg: EngineConfig,
 
     # stage the (small) incoming batch once; everything below reuses it
     inc_path = os.path.join(io.work_dir, "_staged_incoming")
-    incoming.write.mode("overwrite").parquet(inc_path)
+    write_parquet(incoming, inc_path)
     incoming = spark.read.parquet(inc_path)
 
     old_ids = old_docs.select("doc_id", "url")
@@ -133,11 +133,9 @@ def _stage_delta(spark, io: TableIO, changed: DataFrame | None,
     root = _delta_path(io)
     shutil.rmtree(root, ignore_errors=True)
     os.makedirs(root, exist_ok=True)
-    touched.select(*DOC_COLS).write.mode("overwrite").parquet(
-        _delta_path(io, "touched"))
+    write_parquet(touched.select(*DOC_COLS), _delta_path(io, "touched"))
     if changed is not None:
-        changed.select(*DOC_COLS).write.mode("overwrite").parquet(
-            _delta_path(io, "changed"))
+        write_parquet(changed.select(*DOC_COLS), _delta_path(io, "changed"))
     marker = {"has_changed": changed is not None}
     tmp = _delta_path(io, "pending.json.tmp")
     with open(tmp, "w") as f:

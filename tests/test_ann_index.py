@@ -489,6 +489,9 @@ def test_ivfpq_append_refuses_uncommitted_or_mismatched(spark, emb,
     # the SAME object that ran the (now-uncommitted) build still holds
     # trained quantizers in memory — append must consult DISK, not them
     # (the failed-build scenario: quantizers assigned, write crashed)
-    assert built.coarse is not None
+    coarse, books = built.coarse, built.codebooks
+    assert coarse is not None
     with pytest.raises(ValueError, match="sidecar"):
         built.append(emb)
+    # the refusal mutates nothing: the quantizers stay for a retried build
+    assert built.coarse is coarse and built.codebooks is books

@@ -231,3 +231,27 @@ def test_percentile_routes_agree_randomized(spark, rows, top_frac):
     w = _pct_rows(spark, data, top_frac, "window")
     h = _pct_rows(spark, data, top_frac, "histogram")
     assert h == w, (top_frac, rows)
+
+
+@pytest.mark.parametrize("method", ["window", "histogram"])
+def test_percentile_integer_strata_under_ansi(spark, method):
+    """Integer strata (e.g. lang ids) give the same result as their string
+    spelling on both routes with ANSI SQL on."""
+    from searchengine_spark.operators.curate import quality_percentile_filter
+
+    rows = _tie_heavy_corpus()
+    ids = {lang: i for i, lang in enumerate(
+        sorted({r[2] for r in rows if r[2] is not None}))}
+    int_rows = [(d, t, None if lang is None else ids[lang])
+                for d, t, lang in rows]
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        df = spark.createDataFrame(int_rows,
+                                   "doc_id long, text string, lang int")
+        got = sorted((r["doc_id"], r["n_tokens"]) for r in
+                     quality_percentile_filter(df, top_frac=0.5,
+                                               method=method).collect())
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert got == _pct_rows(spark, rows, 0.5, "window")
